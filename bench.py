@@ -25,6 +25,7 @@ the reported number); `n_runs` says how hard each query fought the box.
 from __future__ import annotations
 
 import json
+import math
 import os
 import sys
 import time
@@ -633,6 +634,8 @@ def main() -> None:
 
     total = round(sum(times.values()), 3)
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
+    # The canary and vs_prev references are sf0.1 runs.
+    at_ref_sf = isinstance(sf_val, float) and math.isclose(sf_val, 0.1)
     # The calibration and rotation tiers must never cost the round its
     # headline numbers; same for the long I/O-bound conversion benches.
     try:
@@ -640,7 +643,7 @@ def main() -> None:
         # other SF the ratios would be meaningless.
         canary = (
             canary_section(times)
-            if sf_val == 0.1
+            if at_ref_sf
             else {"skipped": f"canary refs are sf0.1, ran sf{sf_val}"}
         )
     except Exception as exc:  # pragma: no cover - defensive
@@ -671,7 +674,7 @@ def main() -> None:
         # no ref family is comparable.
         conv_cal = (
             conv_canary_section(conv, conv_canary)
-            if sf_val == 0.1
+            if at_ref_sf
             else {"skipped": f"conv canary refs are sf0.1, ran sf{sf_val}"}
         )
     except Exception as exc:  # pragma: no cover - defensive
@@ -716,14 +719,12 @@ def main() -> None:
                 if (m := _re.search(r"BENCH_DETAIL_r(\d+)\.json$", p))
             )
         )
-        if archived and sf_val == 0.1:
+        if archived and at_ref_sf:
             prev_round, prev_path = archived[-1]
             with open(prev_path) as f:
                 prev = json.load(f)
             pq = prev.get("queries", {})
             common = [k for k in times if k in pq and pq[k] > 0]
-            import math as _math
-
             ratios = [times[k] / pq[k] for k in common]
             vs_prev = {
                 "prev_round_file": os.path.basename(prev_path),
@@ -734,7 +735,7 @@ def main() -> None:
                 "n_common": len(common),
                 "geomean_ratio": (
                     round(
-                        _math.exp(sum(_math.log(r) for r in ratios) / len(ratios)),
+                        math.exp(sum(math.log(r) for r in ratios) / len(ratios)),
                         3,
                     )
                     if ratios

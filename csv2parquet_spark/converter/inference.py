@@ -9,8 +9,11 @@ rows, N=0 = skip → all Utf8), regex-classify each column into
 Spark's own CSV inference yields different types (Int32 / Decimal /
 Timestamp), so for schema-output parity this module re-implements the
 arrow-csv lattice as a Spark job: read the sample as all-strings,
-classify with Catalyst regexp predicates (one aggregate over boolean
-matches — distributed, no driver-side row loop), then map to Spark types.
+unpivot it to one (column position, value) row per cell, and group by
+position, bit-OR-ing ONE class expression per cell. The plan holds a
+single classifier however wide the CSV is, and every row is classified
+on the executors; the merge rule then maps each column's class mask to
+a type.
 """
 
 from __future__ import annotations
@@ -49,39 +52,23 @@ ARROW_TO_SPARK = {
 }
 
 
-def _classify_column(df: DataFrame, col: str) -> F.Column:
-    """Per-column type mask: each non-null value is classified ONCE by a
-    short-circuiting CASE down the lattice, and the column aggregates to
-    a bit-OR of observed classes. The mask reproduces arrow-csv's merge
-    rule exactly in :func:`_mask_to_arrow`.
-
-    Two evaluation-cost choices (the classify pass IS the conversion
-    bottleneck at GB inputs — measured ~30% of total):
-
-    * The CASE tries classes in data-frequency order (int, float, dates,
-      bool) instead of lattice order — safe because the only overlapping
-      pair of classes is INTEGER ⊂ FLOAT and that priority is kept.
-    * Every class except FLOAT uses regex-free string predicates
-      (``translate`` digit-stripping + ``LIKE`` positional wildcards),
-      equivalent to the reference regexes (property-tested in
-      tests/test_inference.py) and ~2× cheaper than java.util.regex per
-      cell. FLOAT keeps its regex: the optional-exponent grammar has no
-      clean LIKE/translate form.
-    """
-    # Backtick-quote the RAW header name: a CSV header like `user.id`
-    # would otherwise parse as a nested-field reference and abort the
-    # whole conversion with UNRESOLVED_COLUMN (review r8); embedded
-    # backticks escape by doubling, per Spark identifier rules.
-    c = F.col("`" + col.replace("`", "``") + "`")
-    nonnull = c.isNotNull() & (c != "")
-    return F.coalesce(F.bit_or(F.when(nonnull, _value_class_bit(c))), F.lit(0)).alias(
-        col
-    )
-
-
 def _value_class_bit(c: F.Column) -> F.Column:
-    """Lattice class bit of one value (equivalence with the reference
-    regexes is property-tested in tests/test_properties.py)."""
+    """Lattice class bit of one non-empty value: a short-circuiting CASE
+    classifies it ONCE, and a column's bit-OR of these reproduces
+    arrow-csv's merge rule exactly in :func:`_mask_to_arrow`.
+
+    The CASE tries classes in data-frequency order (int, float, dates,
+    bool) instead of lattice order — safe because the only overlapping
+    pair of classes is INTEGER ⊂ FLOAT and that priority is kept. Every
+    class except FLOAT uses regex-free string predicates (``translate``
+    digit-stripping + ``LIKE`` positional wildcards), about 2× cheaper
+    than java.util.regex per cell; FLOAT keeps its regex, as the
+    optional-exponent grammar has no clean LIKE/translate form. This
+    per-cell cost sets a full-pass inference's time on large inputs
+    (150 MB CSV, 2 task slots: about 10 s classifying, 1 s parsing).
+    Equivalence with the reference regexes is property-tested in
+    tests/test_properties.py.
+    """
     # ^-?\d+$ : strip one leading '-', then all-digits and non-empty.
     body = F.when(c.startswith("-"), F.substring(c, 2, 2147483647)).otherwise(c)
     is_int = (body != "") & (F.translate(body, "0123456789", "") == "")
@@ -132,7 +119,7 @@ def infer_arrow_types(
     The whole classification is ONE distributed aggregate — no collect of
     data rows, so it scales to any input size.
     """
-    if max_read_records == 0:
+    if max_read_records == 0 or not raw.columns:
         return {c: ARROW_UTF8 for c in raw.columns}
     sample = raw.limit(max_read_records) if max_read_records else raw
     # A multiLine CSV read is a single split, which would serialize the
@@ -145,8 +132,20 @@ def infer_arrow_types(
         max_read_records is None or max_read_records > 65536
     ) and sample.rdd.getNumPartitions() < para:
         sample = sample.repartition(para)
-    row = sample.agg(*[_classify_column(sample, c) for c in raw.columns]).collect()[0]
-    return {c: _mask_to_arrow(row[c]) for c in raw.columns}
+    # Positional names: a raw header such as `user.id` or one holding a
+    # backtick never has to be quoted as a column reference.
+    keys = [f"c{i}" for i in range(len(raw.columns))]
+    v = F.col("v")
+    masks = dict(
+        sample.toDF(*keys)
+        .unpivot([], keys, "k", "v")
+        .where(v.isNotNull() & (v != ""))
+        .groupBy("k")
+        .agg(F.bit_or(_value_class_bit(v)).alias("mask"))
+        .collect()
+    )
+    # A column with no non-empty value has no group: mask 0 → Utf8.
+    return {c: _mask_to_arrow(masks.get(k, 0)) for c, k in zip(raw.columns, keys)}
 
 
 def infer_schema(

@@ -81,6 +81,142 @@ def test_inference_nulls(spark, tmp):
     assert schema["i"].dataType == T.LongType()
 
 
+def _reference_arrow_types(raw, max_read_records):
+    """Per-column reference for the inference: the first
+    ``max_read_records`` rows (None = all), classified one column at a
+    time in Python by the reference regexes, merged by arrow-csv's rule.
+    fullmatch + ASCII give rust-regex ``$`` and Java ``\\d`` semantics."""
+    import re
+
+    from csv2parquet_spark.converter import inference as I
+
+    classes = (
+        (I.ARROW_INT64, I.INTEGER_RE), (I.ARROW_FLOAT64, I.FLOAT_RE),
+        (I.ARROW_DATE32, I.DATE32_RE), (I.ARROW_DATE64, I.DATE64_RE),
+        (I.ARROW_BOOLEAN, I.BOOLEAN_RE),
+    )
+    rows = raw.collect()[:max_read_records]
+    types = []
+    for i in range(len(raw.columns)):
+        seen = {
+            next((t for t, pat in classes if re.fullmatch(pat, r[i], re.ASCII)), I.ARROW_UTF8)
+            for r in rows
+            if r[i]
+        }
+        if seen == {I.ARROW_INT64, I.ARROW_FLOAT64}:
+            seen = {I.ARROW_FLOAT64}
+        types.append(seen.pop() if len(seen) == 1 else I.ARROW_UTF8)
+    return types
+
+
+def _wide_csv(ncols: int, nrows: int) -> str:
+    """A CSV whose columns cycle through every lattice class, the merged
+    conflicts, empty cells and an all-empty column."""
+    import random
+
+    rng = random.Random(ncols)
+    gens = [
+        lambda: str(rng.randint(-999, 999)),
+        lambda: f"{rng.uniform(-9, 9):.3f}",
+        lambda: rng.choice(["7", "-2.5", "1e3", ".5"]),
+        lambda: f"20{rng.randint(10, 29)}-0{rng.randint(1, 9)}-1{rng.randint(0, 9)}",
+        lambda: rng.choice(["2021-03-04T05:06:07", "1999-12-31 23:59:59"]),
+        lambda: rng.choice(["true", "FALSE", "True"]),
+        lambda: rng.choice(["word", "x y", "2021-03-04", "12"]),
+        lambda: rng.choice(["", "", "5"]),
+        lambda: "",
+    ]
+    header = ",".join(f"h{j}" for j in range(ncols))
+    rows = [",".join(gens[j % len(gens)]() for j in range(ncols)) for _ in range(nrows)]
+    return "\n".join([header, *rows]) + "\n"
+
+
+MULTILINE_CSV = (
+    'a,b,c\n1,7,2021-01-01\n2,"multi\nline",2021-01-02\n'
+    '"3","he said ""hi""",bad\n4,5,2021-01-04\n'
+)
+
+
+@pytest.mark.parametrize(
+    "content,header,max_read_records",
+    [
+        ("user.id,price.usd,weird`tick\n1,2.5,x\n3,4.5,y\n", True, None),
+        ("a,a,A,b\n1,x,2.5,true\n2,y,3,false\n", True, None),
+        ("x,y\n", True, None),
+        ("", True, None),
+        ("a,b,c\n1,,x\n2,,\n", True, None),
+        ("1,x,2020-01-01\n2,y,2020-01-02\n", False, None),
+        (MULTILINE_CSV, True, None),
+        (MULTILINE_CSV, True, 0),
+        (MULTILINE_CSV, True, 1),
+        (MULTILINE_CSV, True, 5),
+        (_wide_csv(200, 40), True, None),
+    ],
+    ids=[
+        "dotted_backtick", "duplicate_names", "header_only", "empty_file",
+        "all_empty_column", "no_header", "multiline_all", "multiline_0",
+        "multiline_1", "multiline_5", "200_columns",
+    ],
+)
+def test_inference_matches_per_column_reference(spark, tmp, content, header, max_read_records):
+    """infer_schema's one grouped aggregate over unpivoted cells gives
+    every column the type a per-column classification by the reference
+    regexes gives it."""
+    p = _write(tmp, "in.csv", content)
+    raw = spark.read.options(header=header, multiLine=True, escape='"').csv(p)
+    schema = infer_schema(raw, max_read_records)
+    assert schema.names == raw.columns
+    want = _reference_arrow_types(raw, max_read_records)
+    from csv2parquet_spark.converter.inference import ARROW_TO_SPARK
+
+    assert [f.dataType for f in schema.fields] == [ARROW_TO_SPARK[t] for t in want]
+    assert all(f.nullable for f in schema.fields)
+
+
+@pytest.mark.parametrize("ncols", [3, 200])
+def test_inference_plan_has_one_classifier(spark, tmp, monkeypatch, ncols):
+    """The inference runs one aggregate whose optimized plan holds
+    exactly one RLIKE (the FLOAT class) whatever the CSV's width: every
+    cell goes through one classification expression, not one expression
+    tree per column."""
+    p = _write(tmp, "wide.csv", _wide_csv(ncols, 3))
+    raw = _raw(spark, p)
+    collected = []
+    collect0 = type(raw).collect
+
+    def spy(self):
+        collected.append(self)
+        return collect0(self)
+
+    monkeypatch.setattr(type(raw), "collect", spy)
+    infer_schema(raw)
+    assert len(collected) == 1
+    plan = collected[0]._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("RLIKE(") == 1, plan[:3000]
+
+
+def test_quote_sniff_runs_once_per_call(spark, tmp, monkeypatch):
+    """convert() and read_csv() scan a local input for a quote byte once
+    per call, and share the answer between inference and the data read."""
+    import importlib
+
+    # the module, not the package's re-exported convert() of that name
+    cm = importlib.import_module("csv2parquet_spark.converter.convert")
+    calls = []
+    sniff0 = cm._effective_multiline
+
+    def sniff(*a):
+        calls.append(a)
+        return sniff0(*a)
+
+    monkeypatch.setattr(cm, "_effective_multiline", sniff)
+    src = _write(tmp, "typed.csv", TYPED_CSV)
+    convert(spark, src, os.path.join(tmp, "typed.parquet"))
+    assert len(calls) == 1
+    assert cm.read_csv(spark, src, ConvertOptions()).count() == 3
+    assert len(calls) == 2
+
+
 def test_roundtrip_typed(spark, tmp):
     src = _write(tmp, "typed.csv", TYPED_CSV)
     out = os.path.join(tmp, "typed.parquet")
